@@ -107,67 +107,141 @@ object AvroCodec {
   private[graft] def internalRowDatumWriter(avroSchema: Schema, sparkSchema: StructType)
       : InternalRowDatumWriter = new InternalRowDatumWriter(avroSchema, sparkSchema)
 
-  /** Decode one Avro field straight off the binary decoder into its
-    * Tungsten representation — the read-side mirror of [[FieldWriter]]:
-    * no `GenericRecord` store, no schema walk, no `Utf8` wrapper.
-    * String/bytes read through `readBytes(null)` (fresh buffer per
-    * value — the returned row must not alias decoder-reused memory). */
-  private[graft] type FieldReader = org.apache.avro.io.Decoder => Any
+  // Field kinds of the flat reader.
+  private final val RStr = 0; private final val RBytes = 1; private final val RBool = 2
+  private final val RInt = 3; private final val RLong = 4; private final val RLongAsInt = 5
+  private final val RFloat = 6; private final val RDouble = 7; private final val RTsMillis = 8
 
-  private def fieldReader(avro: Schema, dt: DataType): FieldReader = {
-    if (avro.getType == Schema.Type.UNION) {
-      val (nullIdx, _, valSchema) = optionalBranches(avro)
-      val base = fieldReader(valSchema, dt)
-      return d => {
-        val idx = d.readIndex()
-        if (idx == nullIdx) { d.readNull(); null } else base(d)
-      }
-    }
+  private def readKind(avro: Schema, dt: DataType): Int = {
     val logical = Option(avro.getProp("logicalType"))
     (avro.getType, dt) match {
-      case (Schema.Type.STRING, StringType) => d => {
-        val bb = d.readBytes(null)
-        UTF8String.fromBytes(bb.array(), bb.position(), bb.remaining())
-      }
-      case (Schema.Type.BYTES, BinaryType) => d => {
-        val bb = d.readBytes(null)
-        val a = new Array[Byte](bb.remaining()); bb.get(a); a
-      }
-      case (Schema.Type.BOOLEAN, BooleanType) => d => d.readBoolean()
-      case (Schema.Type.INT, IntegerType)     => d => d.readInt()
-      case (Schema.Type.LONG, LongType)       => d => d.readLong()
-      case (Schema.Type.LONG, IntegerType)    => d => d.readLong().toInt
-      case (Schema.Type.FLOAT, FloatType)     => d => d.readFloat()
-      case (Schema.Type.DOUBLE, DoubleType)   => d => d.readDouble()
-      case (Schema.Type.INT, DateType)        => d => d.readInt()
+      case (Schema.Type.STRING, StringType)                   => RStr
+      case (Schema.Type.BYTES, BinaryType)                    => RBytes
+      case (Schema.Type.BOOLEAN, BooleanType)                 => RBool
+      case (Schema.Type.INT, IntegerType | DateType)          => RInt
+      case (Schema.Type.LONG, LongType)                       => RLong
+      case (Schema.Type.LONG, IntegerType)                    => RLongAsInt
+      case (Schema.Type.FLOAT, FloatType)                     => RFloat
+      case (Schema.Type.DOUBLE, DoubleType)                   => RDouble
       case (Schema.Type.LONG, TimestampType | TimestampNTZType)
-          if logical.contains("timestamp-millis") =>
-        d => Math.multiplyExact(d.readLong(), 1000L)
-      case (Schema.Type.LONG, TimestampType | TimestampNTZType) => d => d.readLong()
+          if logical.contains("timestamp-millis")             => RTsMillis
+      case (Schema.Type.LONG, TimestampType | TimestampNTZType) => RLong
       case (a, t) =>
         throw new IllegalArgumentException(s"AvroCodec: cannot decode Avro $a as Spark $t")
     }
   }
 
-  /** Sequential-field decoder for the writer == reader case (flat
-    * schema, no unions → the wire layout IS the field order). Callers
-    * MUST verify schema equality first; mismatched writers go through
-    * the resolving `GenericDatumReader` path. */
-  private[graft] final class InternalRowDatumReader(avroSchema: Schema, sparkSchema: StructType) {
-    private val readers: Array[FieldReader] =
-      sparkSchema.fields.zipWithIndex.map { case (f, i) =>
-        fieldReader(avroSchema.getFields.get(i).schema(), f.dataType)
-      }.toArray
-    def read(d: org.apache.avro.io.Decoder): InternalRow = {
-      val out = new Array[Any](readers.length)
+  /** Flat-record decode for the writer == reader case (fields in wire
+    * order, optional `["null", T]` unions allowed): zigzag varints and
+    * little-endian floats read straight off the byte array into the
+    * row's primitive setters — the read-side twin of [[AvroWire]], with
+    * no `Decoder`, no boxing and no `GenericRecord`. Callers MUST
+    * verify schema equality first; evolved writers go through the
+    * resolving `GenericDatumReader`.
+    *
+    * Error behavior is `BinaryDecoder`'s: a body that ends early throws
+    * `EOFException`, a varint past its width throws
+    * `InvalidNumberEncodingException`, a bad length fails
+    * `SystemLimitException.checkMaxBytesLength`; bytes after the last
+    * field are left unread. String and bytes values are copied out, so
+    * a row never aliases the input buffer (OCF block buffers are
+    * reused). NOT thread-safe; one instance per task. */
+  private[graft] final class FlatReader(avroSchema: Schema, sparkSchema: StructType) {
+    require(avroSchema.getFields.size == sparkSchema.size,
+      s"Avro schema has ${avroSchema.getFields.size} fields, struct has ${sparkSchema.size}")
+    private val n = sparkSchema.size
+    /** Union branch index that means null, or -1 for a plain field. */
+    private val nullIdx: Array[Int] = Array.tabulate(n) { i =>
+      val a = avroSchema.getFields.get(i).schema()
+      if (a.getType == Schema.Type.UNION) optionalBranches(a)._1 else -1
+    }
+    private val kinds: Array[Int] = Array.tabulate(n) { i =>
+      val a = avroSchema.getFields.get(i).schema()
+      readKind(if (a.getType == Schema.Type.UNION) optionalBranches(a)._3 else a,
+        sparkSchema(i).dataType)
+    }
+    private val types = sparkSchema.fields.map(_.dataType).toSeq
+    private var buf: Array[Byte] = _
+    private var pos = 0
+    private var end = 0
+
+    def newRow(): InternalRow =
+      new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(types)
+
+    /** Decode the record at `bytes[off, limit)` into every field of
+      * `row`; returns the offset after it. */
+    def read(bytes: Array[Byte], off: Int, limit: Int, row: InternalRow): Int = {
+      buf = bytes; pos = off; end = limit
       var i = 0
-      while (i < readers.length) { out(i) = readers(i)(d); i += 1 }
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+      while (i < n) {
+        if (nullIdx(i) >= 0 && readInt() == nullIdx(i)) row.setNullAt(i)
+        else kinds(i) match {
+          case RStr      => row.update(i, UTF8String.fromBytes(readBytes()))
+          case RBytes    => row.update(i, readBytes())
+          case RBool     => row.setBoolean(i, next() == 1)
+          case RInt      => row.setInt(i, readInt())
+          case RLong     => row.setLong(i, readLong())
+          case RLongAsInt => row.setInt(i, readLong().toInt)
+          case RFloat    => row.setFloat(i, java.lang.Float.intBitsToFloat(fixed(4).toInt))
+          case RDouble   => row.setDouble(i, java.lang.Double.longBitsToDouble(fixed(8)))
+          case RTsMillis => row.setLong(i, Math.multiplyExact(readLong(), 1000L))
+        }
+        i += 1
+      }
+      pos
+    }
+
+    private def next(): Int = {
+      if (pos >= end) throw new java.io.EOFException()
+      val b = buf(pos) & 0xff
+      pos += 1
+      b
+    }
+
+    private def readInt(): Int = {
+      var b = next()
+      var v = b & 0x7f
+      var shift = 7
+      while (b > 0x7f) {
+        if (shift > 28) throw new org.apache.avro.InvalidNumberEncodingException("Invalid int encoding")
+        b = next()
+        v |= (b & 0x7f) << shift
+        shift += 7
+      }
+      (v >>> 1) ^ -(v & 1)
+    }
+
+    private def readLong(): Long = {
+      var b = next()
+      var v = (b & 0x7f).toLong
+      var shift = 7
+      while (b > 0x7f) {
+        if (shift > 63) throw new org.apache.avro.InvalidNumberEncodingException("Invalid long encoding")
+        b = next()
+        v |= (b & 0x7fL) << shift
+        shift += 7
+      }
+      (v >>> 1) ^ -(v & 1)
+    }
+
+    /** `width` little-endian bytes. */
+    private def fixed(width: Int): Long = {
+      if (end - pos < width) { pos = end; throw new java.io.EOFException() }
+      var v = 0L
+      var i = 0
+      while (i < width) { v |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
+      pos += width
+      v
+    }
+
+    private def readBytes(): Array[Byte] = {
+      val len = org.apache.avro.SystemLimitException.checkMaxBytesLength(readLong())
+      if (end - pos < len) throw new java.io.EOFException()
+      val a = java.util.Arrays.copyOfRange(buf, pos, pos + len)
+      pos += len
+      a
     }
   }
-
-  private[graft] def internalRowDatumReader(avroSchema: Schema, sparkSchema: StructType)
-      : InternalRowDatumReader = new InternalRowDatumReader(avroSchema, sparkSchema)
 
   /** Avro field value → Catalyst value converters. */
   private def decoder(avro: Schema, dt: DataType): AnyRef => Any = {
@@ -268,8 +342,8 @@ object AvroCodec {
 
   /** Avro binary (record body) → struct. Same-shape schemas ONLY: the
     * writer schema is assumed identical to `avroJson` and fields map
-    * positionally (that contract is exactly what lets the sequential
-    * [[InternalRowDatumReader]] decode without a `GenericRecord`) — use
+    * positionally (that contract is exactly what lets the
+    * [[FlatReader]] decode without a `GenericRecord`) — use
     * [[AvroDecodeFramed]] (writer→reader resolution by name) whenever
     * the writer can differ. */
   case class AvroDecode(child: Expression, avroJson: String, outType: StructType)
@@ -278,17 +352,13 @@ object AvroCodec {
     override def prettyName: String = "avro_decode"
 
     @transient private lazy val avroSchema = new Schema.Parser().parse(avroJson)
-    @transient private lazy val irReader: InternalRowDatumReader = {
-      require(avroSchema.getFields.size == outType.size,
-        s"Avro schema has ${avroSchema.getFields.size} fields, struct has ${outType.size}")
-      new InternalRowDatumReader(avroSchema, outType)
-    }
-    @transient private var binDec: BinaryDecoder = _
+    @transient private lazy val reader = new FlatReader(avroSchema, outType)
 
     override def nullSafeEval(input: Any): Any = {
       val bytes = input.asInstanceOf[Array[Byte]]
-      binDec = DecoderFactory.get().binaryDecoder(bytes, binDec)
-      irReader.read(binDec)
+      val row = reader.newRow()
+      reader.read(bytes, 0, bytes.length, row)
+      row
     }
     override protected def withNewChildInternal(c: Expression): AvroDecode = copy(child = c)
   }
@@ -342,9 +412,8 @@ object AvroCodec {
       }
     }
     /** One decode plan per writer id, built lazily per task: the
-      * sequential [[InternalRowDatumReader]] when the writer schema
-      * EQUALS the reader (the overwhelmingly common steady state — no
-      * GenericRecord, no schema walk), the resolving
+      * [[FlatReader]] when the writer schema EQUALS the reader (the
+      * overwhelmingly common steady state), the resolving
       * `GenericDatumReader` for genuinely evolved writers. */
     @transient private lazy val plans = new java.util.HashMap[Int, AnyRef]()
     @transient private var binDec: BinaryDecoder = _
@@ -356,7 +425,7 @@ object AvroCodec {
         schemasById.get(id) match {
           case Some(writerJson) =>
             val writer = new Schema.Parser().parse(writerJson)
-            p = if (writer == readerSchema) new InternalRowDatumReader(readerSchema, outType)
+            p = if (writer == readerSchema) new FlatReader(readerSchema, outType)
                 else new GenericDatumReader[GenericRecord](writer, readerSchema)
             plans.put(id, p)
           case None => return null
@@ -365,17 +434,24 @@ object AvroCodec {
       p
     }
 
-    override def nullSafeEval(input: Any): Any = {
-      val bytes = input.asInstanceOf[Array[Byte]]
+    override def nullSafeEval(input: Any): Any = decode(input.asInstanceOf[Array[Byte]], null)
+
+    /** Decode one frame; null for a bad magic byte or an unknown id.
+      * A flat writer decodes into `into` when given (the generator's
+      * reused row), else into a fresh row; an evolved writer always
+      * yields a fresh row. */
+    private[functions] def decode(bytes: Array[Byte], into: InternalRow): InternalRow = {
       if (bytes.length < 6 || bytes(0) != 0x00) return null // unknown magic byte
       val id = ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
         ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
-      val plan = planFor(id)
-      if (plan == null) return null // unknown schema id
-      binDec = DecoderFactory.get().binaryDecoder(bytes, 5, bytes.length - 5, binDec)
-      plan match {
-        case direct: InternalRowDatumReader => direct.read(binDec)
+      planFor(id) match {
+        case null => null // unknown schema id
+        case flat: FlatReader =>
+          val row = if (into != null) into else flat.newRow()
+          flat.read(bytes, 5, bytes.length, row)
+          row
         case resolving: GenericDatumReader[GenericRecord @unchecked] =>
+          binDec = DecoderFactory.get().binaryDecoder(bytes, 5, bytes.length - 5, binDec)
           reuse = resolving.read(reuse, binDec)
           val n = fieldDec.length
           val out = new Array[Any](n)
@@ -385,7 +461,7 @@ object AvroCodec {
             out(i) = if (v == null) null else fieldDec(i)(v)
             i += 1
           }
-          InternalRow.fromSeq(out.toIndexedSeq)
+          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
       }
     }
     override protected def withNewChildInternal(c: Expression): AvroDecodeFramed = copy(child = c)
@@ -405,13 +481,16 @@ object AvroCodec {
 
     @transient private lazy val inner =
       AvroDecodeFramed(child, schemasById, readerJson, outType)
+    // Reused across messages: the generator's consumer copies each row's
+    // fields out before the next eval.
+    @transient private lazy val row: InternalRow =
+      new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(outType.map(_.dataType))
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val bytes = child.eval(input)
       if (bytes == null) return Iterator.empty
-      val row = inner.nullSafeEval(bytes)
-      if (row == null) Iterator.empty
-      else Iterator.single(row.asInstanceOf[InternalRow])
+      val decoded = inner.decode(bytes.asInstanceOf[Array[Byte]], row)
+      if (decoded == null) Iterator.empty else Iterator.single(decoded)
     }
 
     override protected def withNewChildInternal(c: Expression): AvroDecodeRows = copy(child = c)

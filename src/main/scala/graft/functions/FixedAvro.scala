@@ -10,114 +10,59 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused fixed-width line → Avro record bytes, in ONE pass.
   *
-  * This is the Spark re-expression of the reference's fused toAvro
-  * stage (`fixed2avro/ColumnBuilder.go:198-227`: slice each line,
-  * overwrite one reused record, marshal) — and the end of a measured
-  * optimization ladder. The composable chain
-  * `parse(...)` → `to_avro_confluent(fields)` already collapses into a
-  * single WholeStageCodegen projection, but still pays, per row: one
-  * `GenericArrayData` + 30 slice `UTF8String` wrappers from the shared
-  * slicer, 30 `element_at` dispatches, and per-field boxing on the
-  * fallback parse surfaces. Profiled on the weblog shape (30 cols, 528
-  * runes), that wrapper traffic — NOT the typed parsing and NOT the
-  * Avro buffer — is the dominant cost. [[LineEncoder]] slices and
-  * parses each field straight off the line's backing memory as
-  * `(base, offset, len)` and writes the Avro wire bytes immediately:
-  * zero per-field allocations on the fast paths, strings ship with a
-  * single copy (line buffer → wire buffer).
+  * The Spark re-expression of the reference's fused toAvro stage
+  * (`fixed2avro/ColumnBuilder.go:198-227`: slice each line, overwrite
+  * one reused record, marshal). [[LineEncoder]] runs the parse kernel
+  * ([[FixedSlice.bounds]] — the same single rune-aware walk as the
+  * typed parse) and the same per-type helpers, then writes each value
+  * as Avro wire bytes at once: no per-field allocation, strings ship
+  * with a single copy (line buffer → wire buffer).
   *
   * Two consumers:
   *  - [[FixedEncode]], the Column expression (line → framed `byte[]`)
   *    — the Kafka-frame shape, where the output IS a bytes column;
   *  - the OCF sink (`Ocf.writeFixed`), which hands [[LineEncoder]] the
   *    container BLOCK buffer itself, so record bytes land directly in
-  *    the block with no per-row `byte[]`/UnsafeRow materialization at
-  *    all — the whole file→OCF pipeline allocates nothing per row,
-  *    like the reference's reused-record chunk loop.
+  *    the block with no per-row `byte[]`/UnsafeRow materialization.
   *
   * Semantics are EXACTLY the Strict parse + encode chain's, pinned by
-  * `FixedAvroSpec` byte-identity: slicing is the same rune-aware
-  * single pass ([[FixedSlice.advance]]), numeric/timestamp fields are
-  * space-trimmed zero-copy, parse surfaces reuse the SAME primitives
-  * ([[FastDouble.fastBits]], [[RefTimestamp.parseMicros]],
-  * `UTF8String.toLong` — what Spark's cast calls), and a field whose
-  * strict parse would yield null throws the same no-unions error as
+  * `FixedAvroSpec` byte-identity: the walk, the trim table and the
+  * parse helpers are the parse's own, and a field whose strict parse
+  * would yield null throws the same no-unions error as
   * [[AvroCodec.AvroEncodeDirect]] (SURVEY.md §1.2).
   */
 object FixedAvro {
-
-  // Per-field parse/write plans (tableswitch dispatch in the hot loop).
-  private final val PStr = 0; private final val PBytes = 1
-  private final val PBool = 2; private final val PInt = 3
-  private final val PLong = 4; private final val PFloat = 5
-  private final val PDouble = 6; private final val PDate = 7
-  private final val PTsMillis = 8; private final val PTsMicros = 9
-
-  private def planKind(parseType: String, name: String): Int = parseType match {
-    case "string"           => PStr
-    case "bytes" | "Bytes"  => PBytes
-    case "boolean"          => PBool
-    case "int"              => PInt
-    case "long"             => PLong
-    case "float"            => PFloat
-    case "double"           => PDouble
-    case "date"             => PDate
-    case "timestamp-millis" => PTsMillis
-    case "timestamp-micros" => PTsMicros
-    case other => throw new IllegalArgumentException(
-      s"fixed_to_avro: unsupported type '$other' for $name")
-  }
-
-  /** `try_cast(s AS FLOAT)`'s surface, mirroring [[FastDouble]]'s
-    * pinned double twin: trim → special literals → parseFloat, null on
-    * failure. Kept separate from the double fast path on purpose:
-    * parsing the decimal as double and narrowing would double-round,
-    * which is NOT always Float.parseFloat's answer. */
-  private[graft] def tryParseFloat(s: UTF8String): java.lang.Float = {
-    val str = s.toString.trim
-    str.toLowerCase(java.util.Locale.ROOT) match {
-      case "inf" | "+inf" | "infinity" | "+infinity" =>
-        java.lang.Float.valueOf(Float.PositiveInfinity)
-      case "-inf" | "-infinity" =>
-        java.lang.Float.valueOf(Float.NegativeInfinity)
-      case "nan" => java.lang.Float.valueOf(Float.NaN)
-      case _ =>
-        try java.lang.Float.valueOf(java.lang.Float.parseFloat(str))
-        catch { case _: NumberFormatException => null }
-    }
-  }
+  import FixedSlice._
 
   /** One-pass line → Avro-record-bytes encoder writing into a
-    * CALLER-SUPPLIED [[AvroCodec.AvroWire]]. NOT thread-safe (holds a
-    * reused parse wrapper); one instance per task.
+    * CALLER-SUPPLIED [[AvroCodec.AvroWire]]. NOT thread-safe (holds the
+    * reused bounds buffer); one instance per task.
     *
-    * `nullable = true` (r18) emits the `["null", T]` OPTIONAL-union
-    * wire shape ([[graft.schema.FixedSchema.nullableAvroJson]]): every
+    * `nullable = true` emits the `["null", T]` OPTIONAL-union wire
+    * shape ([[graft.schema.FixedSchema.nullableAvroJson]]): every
     * field is prefixed by its union branch index (0 = null, 1 = T —
     * null-first, the nullableAvroJson branch order), and a slice whose
     * strict parse is null encodes as the null branch instead of
-    * throwing. This closes the r17 restriction where nullable corpora
-    * lost the fused fast path: the branch-index bytes are pinned
-    * byte-identical to the general codec
-    * (parse → to_avro(nullableAvroJson)) by FixedAvroSpec. Every value
-    * is parsed BEFORE its branch index is written, so a failed parse
-    * never leaves a half-written field. The flat default (`nullable =
-    * false`) is unchanged: branch-less bytes, loud throw on null. */
+    * throwing (pinned byte-identical to parse → to_avro(nullableAvroJson)
+    * by FixedAvroSpec). Every value is parsed BEFORE its branch index is
+    * written, so a failed parse never leaves a half-written field. The
+    * flat default (`nullable = false`) writes branch-less bytes and
+    * throws on null. */
   final class LineEncoder(fixed: FixedSchema, frameId: Int,
       nullable: Boolean = false) extends Serializable {
     private val nFields = fixed.fields.size
     private val starts: Array[Int] = fixed.runeStarts.toArray
     private val lens: Array[Int] = fixed.fields.map(_.runeLen).toArray
-    // THE Strict parser's trim table, not a copy: the fused encoder's
-    // byte-identity contract with the parse chain (FixedAvroSpec)
-    // depends on the two never drifting.
-    private val trims: Array[Boolean] =
-      fixed.fields.map(graft.parse.FixedWidthParser.strictTrims).toArray
-    private val kinds: Array[Int] =
-      fixed.fields.map(f => planKind(f.parseType, f.name)).toArray
+    // THE Strict parse's trim table: the byte-identity contract with
+    // the parse chain (FixedAvroSpec) depends on the two never drifting.
+    private val trims: Array[Boolean] = fixed.fields.map(strictTrims).toArray
+    private val kinds: Array[Int] = fixed.fields.map(kindOf).toArray
     private val header: Array[Byte] =
       if (frameId >= 0) Confluent.prefixBytes(frameId) else Array.emptyByteArray
-    @transient private lazy val longWrapper = new UTF8String.LongWrapper
+    // Per-task scratch, set on first use (plain fields, not lazy vals:
+    // the hot loop reads them per field).
+    @transient private var ranges: Array[Long] = _
+    @transient private var cell: FieldCell = _
 
     private def fail(f: Int): Nothing =
       throw new IllegalArgumentException(
@@ -126,166 +71,53 @@ object FixedAvro {
           "the fixed-width schema model has no unions/nullable fields " +
           "(SURVEY.md §1.2); filter or default such lines before encoding")
 
-    /** Strict long surface: plain `[+-]?digits` parsed inline with
-      * Long.parseLong's overflow arithmetic; anything else falls back to
-      * `UTF8String.toLong` — the exact routine Spark's cast calls — so
-      * the two paths cannot diverge on inputs the cast accepts. */
-    private def parseLong(base: AnyRef, off: Long, n: Int, f: Int): Long = {
-      if (n == 0 || n > 19) return parseLongSlow(base, off, n, f)
-      var i = 0
-      var neg = false
-      val b0 = org.apache.spark.unsafe.Platform.getByte(base, off)
-      if (b0 == '-') { neg = true; i = 1 }
-      else if (b0 == '+') i = 1
-      if (i >= n) return parseLongSlow(base, off, n, f)
-      var m = 0L // accumulate negative: holds Long.MinValue
-      while (i < n) {
-        val d = org.apache.spark.unsafe.Platform.getByte(base, off + i) - '0'
-        if (d < 0 || d > 9) return parseLongSlow(base, off, n, f)
-        if (m < -922337203685477580L || (m == -922337203685477580L && d > 8))
-          return parseLongSlow(base, off, n, f) // potential overflow → exact path
-        m = m * 10 - d
-        i += 1
-      }
-      if (neg) m
-      else if (m == Long.MinValue) parseLongSlow(base, off, n, f)
-      else -m
-    }
-
-    private def parseLongSlow(base: AnyRef, off: Long, n: Int, f: Int): Long = {
-      val s = UTF8String.fromAddress(base, off, n)
-      if (s.toLong(longWrapper)) longWrapper.value else fail(f)
-    }
-
     /** Append `line`'s (optional Confluent header +) record body to
       * `wire`. Throws on any field whose strict parse would be null;
       * the wire may then hold a partial record — callers that continue
       * past failures must reset it (both current callers abort). */
     def encodeInto(line: UTF8String, wire: AvroCodec.AvroWire): Unit = {
+      def branch(): Unit = if (nullable) wire.writeLong(1L)
       if (header.length > 0) wire.writeRaw(header)
-      val numBytes = line.numBytes()
-      val base = line.getBaseObject
-      val off = line.getBaseOffset
-      // Identical slicing walk to FixedSlice.slices: offset arithmetic
-      // inside the ASCII prefix, rune-aware advance past it.
-      val ascii = FixedSlice.asciiPrefixLen(line)
-      val allAscii = ascii == numBytes
-      var inWalk = false
-      var charIdx = 0
-      var byteIdx = 0
+      if (ranges == null) { ranges = new Array[Long](nFields); this.cell = new FieldCell }
+      val r = ranges
+      val cell = this.cell
+      FixedSlice.bounds(line, starts, lens, trims, -1, r)
       var f = 0
       while (f < nFields) {
-        var sB = 0
-        var eB = 0
-        if (!inWalk && (allAscii || starts(f) + lens(f) <= ascii)) {
-          sB = Math.min(starts(f), numBytes)
-          eB = Math.min(starts(f) + lens(f), numBytes)
-        } else {
-          if (!inWalk) {
-            inWalk = true
-            charIdx = Math.min(starts(f), ascii)
-            byteIdx = charIdx
-          }
-          var cur = FixedSlice.advance(line, base, off, numBytes, byteIdx, charIdx, starts(f))
-          sB = (cur >>> 32).toInt
-          cur = FixedSlice.advance(line, base, off, numBytes, sB, cur.toInt,
-            starts(f) + lens(f))
-          byteIdx = (cur >>> 32).toInt
-          charIdx = cur.toInt
-          eB = byteIdx
-        }
-        if (trims(f)) {
-          while (sB < eB && org.apache.spark.unsafe.Platform.getByte(base, off + sB) == 0x20)
-            sB += 1
-          while (eB > sB && org.apache.spark.unsafe.Platform.getByte(base, off + eB - 1) == 0x20)
-            eB -= 1
-        }
-        val n = eB - sB
-        val fOff = off + sB
-        // nullable lane: nothing touches the wire before the parse is
-        // known-good — branch index 1 then value on success, a single
-        // 0x00 (branch 0, null-first union) on a failed strict parse.
-        kinds(f) match {
-          case PStr | PBytes =>
-            if (nullable) wire.writeLong(1L)
-            wire.writeMemory(base, fOff, n)
-          case PLong | PInt =>
-            if (nullable) {
-              // cast-equivalent surface directly (UTF8String.toLong):
-              // the fused digit loop's only job was avoiding this
-              // wrapper on the throwing path's hot loop
-              val s = UTF8String.fromAddress(base, fOff, n)
-              if (s.toLong(longWrapper) && (kinds(f) == PLong ||
-                  (longWrapper.value >= Int.MinValue && longWrapper.value <= Int.MaxValue))) {
-                wire.writeLong(1L); wire.writeLong(longWrapper.value)
-              } else wire.writeLong(0L)
-            } else {
-              // Avro int and long share the zigzag varint encoding over the
-              // int range (pinned in AvroDirectSpec), so one writeLong
-              // serves both — and any int/long → Avro long promotion.
-              val v = parseLong(base, fOff, n, f)
-              if (kinds(f) == PInt && (v < Int.MinValue || v > Int.MaxValue)) fail(f)
-              wire.writeLong(v)
-            }
-          case PDouble =>
-            val bits = FastDouble.fastBits(base, fOff, n)
-            if (bits != FastDouble.FallbackBits) {
-              if (nullable) wire.writeLong(1L)
-              wire.writeDouble(java.lang.Double.longBitsToDouble(bits))
-            } else {
-              val d = FastDouble.tryParse(UTF8String.fromAddress(base, fOff, n))
-              if (d == null) { if (nullable) wire.writeLong(0L) else fail(f) }
-              else {
-                if (nullable) wire.writeLong(1L)
-                wire.writeDouble(d.doubleValue())
-              }
-            }
-          case PTsMicros =>
-            val micros = RefTimestamp.parseMicros(base, fOff, n)
-            if (micros == Long.MinValue) { if (nullable) wire.writeLong(0L) else fail(f) }
-            else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeLong(micros)
-            }
-          case PTsMillis =>
-            val micros = RefTimestamp.parseMicros(base, fOff, n)
-            if (micros == Long.MinValue) { if (nullable) wire.writeLong(0L) else fail(f) }
-            else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeLong(Math.floorDiv(micros, 1000L))
-            }
-          case PDate =>
-            val micros = RefTimestamp.parseMicros(base, fOff, n)
-            if (micros == Long.MinValue) { if (nullable) wire.writeLong(0L) else fail(f) }
-            else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeLong(Math.floorDiv(micros, 86400000000L))
-            }
-          case PBool =>
-            // Strict vocabulary: first char J/j/Y/y → true, N/n → false,
-            // anything else (incl. empty) is a null parse → throw (or
-            // null branch). A multibyte first char can never match,
-            // exactly like the upper(substring(raw,1,1)).isin chain.
-            val c = if (n == 0) 0.toByte
-              else org.apache.spark.unsafe.Platform.getByte(base, fOff)
-            if (c == 'J' || c == 'j' || c == 'Y' || c == 'y') {
-              if (nullable) wire.writeLong(1L)
-              wire.writeBoolean(true)
-            } else if (c == 'N' || c == 'n') {
-              if (nullable) wire.writeLong(1L)
-              wire.writeBoolean(false)
-            } else if (nullable) wire.writeLong(0L)
-            else fail(f)
-          case PFloat =>
-            // Rare type on hot schemas; route through the cast-equivalent
-            // surface (tryParseFloat: trim → specials → parseFloat).
-            val v = tryParseFloat(UTF8String.fromAddress(base, fOff, n))
-            if (v == null) { if (nullable) wire.writeLong(0L) else fail(f) }
-            else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeFloat(v.floatValue())
+        val p = r(f)
+        // `ok` false = the strict parse is null: one 0x00 (branch 0,
+        // null-first union) in the nullable lane, a throw otherwise.
+        val ok = kinds(f) match {
+          case KStr | KBytes =>
+            branch()
+            wire.writeMemory(line.getBaseObject, line.getBaseOffset + startOf(p), lenOf(p))
+            true
+          case KLong =>
+            strictLong(line, p, cell) && { branch(); wire.writeLong(cell.l); true }
+          case KInt =>
+            // Avro int and long share the zigzag varint encoding over the
+            // int range (pinned in AvroDirectSpec), so one writeLong
+            // serves both.
+            strictInt(line, p, cell) && { branch(); wire.writeLong(cell.l); true }
+          case KDouble =>
+            strictDouble(line, p, cell) && { branch(); wire.writeDouble(cell.d); true }
+          case KFloat =>
+            strictFloat(line, p, cell) && { branch(); wire.writeFloat(cell.f); true }
+          case KBool =>
+            val b = strictBool(line, p)
+            b >= 0 && { branch(); wire.writeBoolean(b == 1); true }
+          case k =>
+            val m = micros(line, p)
+            m != Long.MinValue && {
+              branch()
+              wire.writeLong(
+                if (k == KTsMicros) m
+                else if (k == KTsMillis) Math.floorDiv(m, 1000L)
+                else Math.floorDiv(m, MicrosPerDay))
+              true
             }
         }
+        if (!ok) { if (nullable) wire.writeLong(0L) else fail(f) }
         f += 1
       }
     }

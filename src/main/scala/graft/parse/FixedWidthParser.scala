@@ -1,6 +1,6 @@
 package graft.parse
 
-import graft.schema.{FixedField, FixedSchema}
+import graft.schema.FixedSchema
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,12 +28,14 @@ case object Compat extends ParseMode
   *
   * Spark-first re-expression of the reference's per-chunk scan loop
   * (`fixed2avro/ColumnBuilder.go:198-227`): the chunking/CRLF alignment
-  * (`ParalizeChunks` / `FindLastNL`) is replaced by Hadoop line records in
-  * `spark.read.text`; the per-column `ColumnBuilder` family
-  * (`fixed2avro/ColumnBuilderTypes.go`) becomes a projection of built-in
-  * codegen'd expressions — `substring` is codepoint-based, which matches
-  * the reference's rune-width slicing (`fixed2avro/Util.go:45-65`, fine
-  * print F4). The whole parse is one WholeStageCodegen span: no UDFs.
+  * (`ParalizeChunks` / `FindLastNL`) is replaced by line records
+  * ([[graft.sources.LineScan]]); the per-column `ColumnBuilder` family
+  * (`fixed2avro/ColumnBuilderTypes.go`) becomes the parse kernel
+  * ([[graft.functions.FixedSlice]]): one rune-aware bounds walk per
+  * line (the reference's rune-width slicing, `fixed2avro/Util.go:45-65`,
+  * fine print F4) and one codegen'd typed expression per column that
+  * parses straight from the line's memory. The whole parse is one
+  * WholeStageCodegen span: no UDFs.
   */
 object FixedWidthParser {
 
@@ -56,116 +58,11 @@ object FixedWidthParser {
   def isFooter(line: Column): Column =
     line.startsWith(FooterPrefix) && octet_length(line) > FooterPrefix.length
 
-  /** Parse to NTZ wall-clock, null on failure — the fixed-layout
-    * codegen'd parser (graft.functions.RefTimestamp): same accepted
-    * grammar as `try_to_timestamp(c, TimestampFormat)` incl. the F3
-    * lenient 1..6-digit decimal fraction, ~6x faster than routing every
-    * row through DateTimeFormatter (timestamps were ~45% of the parse
-    * leg). Timezone-free like the reference's zero-value time.Location
-    * (`ColumnBuilder.go:229`). */
-  private def tryTimestampNtz(c: Column): Column =
-    graft.functions.RefTimestamp.parse_ref_timestamp(c)
-
-  /** Should the raw slice be space-trimmed before typing in Strict
-    * mode? (strings/bytes keep their padding verbatim). Shared with
-    * the fused encoder (FixedAvro.LineEncoder), whose byte-identity
-    * contract with this parse chain depends on the two trim tables
-    * never drifting. */
-  private[graft] def strictTrims(f: FixedField): Boolean = f.parseType match {
-    case "string" | "bytes" | "Bytes" => false
-    case _                            => true
-  }
-
-  /** Slice + type one field out of the line column (unaliased). */
-  private def fieldExpr(line: Column, field: FixedField, start: Int, mode: ParseMode): Column = {
-    // Spark substring positions are 1-based and codepoint-counted.
-    val raw = substring(line, start + 1, field.runeLen)
-    mode match {
-      case Strict => strictExpr(if (strictTrims(field)) trim(raw) else raw, field)
-      case Compat => compatExpr(raw, field)
-    }
-  }
-
-  /** Slice + type one field out of the line column. */
-  def fieldColumn(line: Column, field: FixedField, start: Int, mode: ParseMode): Column =
-    fieldExpr(line, field, start, mode).as(field.name)
-
   /** All typed field columns of a schema (for callers that project the
-    * parse alongside other columns) — the same shared single-pass
-    * slicer the full parse uses. */
-  def fieldColumns(line: Column, schema: FixedSchema, mode: ParseMode): Seq[Column] = {
-    val trims = schema.fields.map(f => mode == Strict && strictTrims(f)).toArray
-    val sliced = graft.functions.FixedSlice.fixed_slices(line, schema, trims)
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      val raw = element_at(sliced, i + 1)
-      (mode match {
-        case Strict => strictExpr(raw, f)
-        case Compat => compatExpr(raw, f)
-      }).as(f.name)
-    }
-  }
-
-  /** Type a raw slice. `raw` is expected ALREADY space-trimmed for the
-    * trimmable types (see [[strictTrims]]) — the single-pass slicer
-    * trims zero-copy; the legacy substring path trims explicitly. */
-  private def strictExpr(raw: Column, f: FixedField): Column = f.parseType match {
-    case "boolean" =>
-      // Strict keeps the J/Y vocabulary but nulls out unknowns.
-      val c = upper(substring(raw, 1, 1))
-      when(c.isin("J", "Y"), lit(true))
-        .when(c.isin("N"), lit(false))
-        .otherwise(lit(null).cast(BooleanType))
-    // try_cast/try_to_timestamp: null on failure regardless of the
-    // session's ANSI setting (ANSI is on by default in Spark 4).
-    case "bytes" | "Bytes" => raw.cast(BinaryType)
-    case "int"             => raw.try_cast(IntegerType)
-    case "long"            => raw.try_cast(LongType)
-    case "float"           => raw.try_cast(FloatType)
-    // try_cast-identical semantics, allocation-free on the common plain-
-    // decimal form (doubles were ~20% of the weblog parse leg under the
-    // cast's String + parseDouble per value).
-    case "double"          => graft.functions.FastDouble.fast_try_double(raw)
-    case "string"          => raw // verbatim, padding preserved (ColumnBuilderTypes.go:157-159)
-    case "date"            => to_date(tryTimestampNtz(raw))
-    case "timestamp-millis" | "timestamp-micros" => tryTimestampNtz(raw)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported type '$other' for ${f.name}")
-  }
-
-  /** Go `strconv.ParseInt` base-10 surface: optional sign + digits only.
-    * Spark's cast would trim whitespace; Go does not — a space-padded
-    * `"  42"` is a parse failure → 0 in the reference (§2.2). */
-  private val GoIntRe = "^[+-]?[0-9]+$"
-
-  /** Go `strconv.ParseFloat` surface (decimal + exponent forms; we do not
-    * model inf/nan/hex-float inputs, absent from fixed-width feeds). */
-  private val GoFloatRe = "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
-
-  private def compatExpr(raw: Column, f: FixedField): Column = f.parseType match {
-    case "boolean" =>
-      // First byte only; J/j/Y/y → true, everything else (incl. N) → the
-      // zero value false (ColumnBuilderTypes.go:35-66).
-      upper(substring(raw, 1, 1)).isin("J", "Y")
-    case "bytes" | "Bytes" => raw.cast(BinaryType)
-    // strconv semantics on the UNtrimmed substring; failure → 0 (§2.2).
-    case "int"    => coalesce(when(raw.rlike(GoIntRe), raw.try_cast(IntegerType)), lit(0))
-    case "long"   => coalesce(when(raw.rlike(GoIntRe), raw.try_cast(LongType)), lit(0L))
-    case "float"  => coalesce(when(raw.rlike(GoFloatRe), raw.try_cast(FloatType)), lit(0.0f))
-    case "double" => coalesce(when(raw.rlike(GoFloatRe), raw.try_cast(DoubleType)), lit(0.0d))
-    case "string" => raw
-    case "date" | "timestamp-millis" | "timestamp-micros" =>
-      // F1: all three variants return Unix SECONDS as long
-      // (ColumnBuilder.go:279,330,381); parse failure → 0. The raw
-      // substring stays UNtrimmed: Go time.Parse rejects padded input,
-      // so a space-padded timestamp is a failure → 0, faithfully.
-      // parse_ref_seconds is TIMEZONE-FREE (the previous
-      // unix_timestamp-over-instant-cast route read the session zone,
-      // shifting every value for a caller on a non-UTC session —
-      // this parse is public API beyond the UTC-pinned GraftSession).
-      coalesce(graft.functions.RefTimestamp.parse_ref_seconds(raw), lit(0L))
-    case other =>
-      throw new IllegalArgumentException(s"unsupported type '$other' for ${f.name}")
-  }
+    * parse alongside other columns) — the same shared single walk the
+    * full parse uses. */
+  def fieldColumns(line: Column, schema: FixedSchema, mode: ParseMode): Seq[Column] =
+    graft.functions.FixedSlice.fixed_fields(line, schema, mode == Compat, guarded = false)._1
 
   /** Project a `value: String` line column into the typed schema.
     *
@@ -205,43 +102,15 @@ object FixedWidthParser {
       if (dropFooter)
         lines.filter(!isFooter(line))
       else lines
-    val wellFormed = length(line) === schema.rowRuneLen
-    // All raw slices come from ONE single-pass expression
-    // (graft.functions.FixedSlice): every field references the same
-    // subtree, which whole-stage codegen's subexpression elimination
-    // evaluates once per row — the per-field substring formulation
-    // re-scanned the line per column (O(cols x row_len) per row, the
-    // dominant cost on wide rows). In Strict mode the slicer also
-    // space-trims the numeric/timestamp fields zero-copy (Compat keeps
-    // Go strconv's untrimmed-input semantics).
-    val trims = schema.fields.map(f => mode == Strict && strictTrims(f)).toArray
-    val sliced = graft.functions.FixedSlice.fixed_slices(line, schema, trims)
-    // Corrupt-record guard on the slices ARRAY, not per field: a
-    // per-field `when(wellFormed, typed)` puts every field's slice
-    // inside its own CASE branch, which codegen subexpression
-    // elimination will not hoist — re-walking the line per column. One
-    // guarded array keeps the single shared walk; a corrupt line's
-    // null array propagates null through every typed field.
-    val effSliced = corruptCol match {
-      case Some(_) => when(wellFormed, sliced)
-      case None    => sliced
-    }
-    val cols = schema.fields.zipWithIndex.map { case (f, i) =>
-      val raw = element_at(effSliced, i + 1)
-      (mode match {
-        case Strict => strictExpr(raw, f) // null slice → null field
-        case Compat => corruptCol match {
-          // Compat zero-fills failures, so a null slice would surface
-          // as 0, not null — keep the explicit per-field guard here
-          // (corrupt scanning is a strict-mode feature; this path is
-          // for completeness).
-          case Some(_) => when(wellFormed, compatExpr(raw, f))
-          case None    => compatExpr(raw, f)
-        }
-      }).as(f.name)
-    }
-    val all = cols ++ corruptCol.map(name =>
-      when(!wellFormed, line).otherwise(lit(null).cast(StringType)).as(name))
+    // Every field reads ONE bounds walk (graft.functions.FixedSlice),
+    // which whole-stage codegen's subexpression elimination evaluates
+    // once per row. The corrupt-record guard is folded into that walk:
+    // a malformed line's bounds are null, nulling every field, and the
+    // same null marks the corrupt column — no second length() walk.
+    val (fields, corrupt) = graft.functions.FixedSlice.fixed_fields(line, schema,
+      compat = mode == Compat, guarded = corruptCol.isDefined)
+    val all = fields ++ corruptCol.map(name =>
+      when(corrupt, line).otherwise(lit(null).cast(StringType)).as(name))
     kept.select(all: _*)
   }
 
@@ -255,8 +124,9 @@ object FixedWidthParser {
     * bare, `schemaId = -1`) Avro record bytes in ONE expression per row
     * ([[graft.functions.FixedAvro]]) — the hot export path, matching the
     * reference's fused toAvro stage. Strict semantics; byte-identical to
-    * `parse(...).select(to_avro_confluent(fields))` (FixedAvroSpec), but
-    * with none of the composable chain's per-field wrapper traffic.
+    * `parse(...).select(to_avro_confluent(fields))` (FixedAvroSpec) —
+    * the same bounds walk and parse helpers — but with no typed row in
+    * between.
     *
     * `strict=true` adds the [[parse]] corrupt-record guard to this hot
     * path: a line whose rune length differs from the schema's row

@@ -5,6 +5,7 @@ import graft.registry.SchemaRegistryClient
 import graft.schema.FixedSchema
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Kafka producer staging: typed rows → the exact `(key, value, topic,
   * partition)` frame Spark's Kafka sink consumes.
@@ -89,12 +90,23 @@ object KafkaStage {
     def flush(): Unit = ()
   }
 
-  /** Drive a staged frame into a sink, partition-parallel. */
+  /** Drive a staged frame into a sink, partition-parallel, straight
+    * from the plan's InternalRows (no external-Row conversion). Key and
+    * value are copied out per frame (`getBinary`), so a sink may keep
+    * them; the topic string is decoded once per distinct topic. A null
+    * topic or partition fails the job. */
   def writeTo(staged: DataFrame, mkSink: () => RowSink): Unit =
-    staged.select("topic", "partition", "key", "value").rdd.foreachPartition { rows =>
+    staged.select("topic", "partition", "key", "value").queryExecution.toRdd.foreachPartition { rows =>
       val sink = mkSink()
+      // A clone: the row's own topic is a view into its reused buffer.
+      var topicBytes: UTF8String = null
+      var topic: String = null
       rows.foreach { r =>
-        sink.send(r.getString(0), r.getInt(1), r.getAs[Array[Byte]](2), r.getAs[Array[Byte]](3))
+        if (r.isNullAt(0) || r.isNullAt(1)) throw new NullPointerException(
+          s"KafkaStage.writeTo: null ${if (r.isNullAt(0)) "topic" else "partition"} in a staged frame")
+        val t = r.getUTF8String(0)
+        if (!t.equals(topicBytes)) { topicBytes = t.clone(); topic = t.toString }
+        sink.send(topic, r.getInt(1), r.getBinary(2), r.getBinary(3))
       }
       sink.flush()
     }

@@ -8,6 +8,7 @@ import org.apache.avro.file.{CodecFactory, DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** Avro Object Container File sink + source (snappy), one file per
@@ -265,39 +266,27 @@ object Ocf {
       .binaryFiles(dir + "/*.avro")
       .flatMap { case (_, pds) =>
         val readerSchema = new Schema.Parser().parse(readerJson)
-        // Adaptive datum reader: when the file's writer schema EQUALS the
-        // reader schema (reading our own output — the steady state), each
-        // record decodes straight to InternalRow with no GenericRecord /
-        // schema walk; an evolved writer falls back to the resolving
-        // generic path, converted per field below.
-        val reader = new org.apache.avro.io.DatumReader[AnyRef] {
-          var direct: graft.functions.AvroCodec.InternalRowDatumReader = _
-          var generic: GenericDatumReader[GenericRecord] = _
-          override def setSchema(writer: Schema): Unit =
-            if (writer == readerSchema)
-              direct = graft.functions.AvroCodec.internalRowDatumReader(readerSchema, sparkSchema)
-            else generic = new GenericDatumReader[GenericRecord](writer, readerSchema)
-          override def read(reuse: AnyRef, in: org.apache.avro.io.Decoder): AnyRef =
-            if (direct != null) direct.read(in)
-            else generic.read(reuse match {
-              case r: GenericRecord => r
-              case _ => null
-            }, in)
-        }
-        val stream = new DataFileStream[AnyRef](pds.open(), reader)
+        // The resolving reader is only used for an evolved writer: a file
+        // whose writer schema EQUALS the reader schema (reading our own
+        // output — the steady state) is decoded block by block with the
+        // flat reader, no Decoder / GenericRecord / schema walk.
+        val stream = new DataFileStream[GenericRecord](pds.open(),
+          new GenericDatumReader[GenericRecord](null, readerSchema))
         // Close unconditionally at task end: a limit/take or task failure
         // leaves the iterator partially consumed, which would otherwise
         // leak the file handle and snappy decompressor.
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => stream.close()))
-        val conv = sparkSchema.fields.zipWithIndex.map { case (f, i) =>
-          avroToInternal(readerSchema.getFields.get(i).schema(), f.dataType)
-        }
-        new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-          def hasNext: Boolean = { val h = stream.hasNext; if (!h) stream.close(); h }
-          def next(): org.apache.spark.sql.catalyst.InternalRow = stream.next() match {
-            case row: org.apache.spark.sql.catalyst.InternalRow => row
-            case rec: GenericRecord =>
+        if (stream.getSchema == readerSchema) flatRows(stream, readerSchema, sparkSchema)
+        else {
+          val conv = sparkSchema.fields.zipWithIndex.map { case (f, i) =>
+            avroToInternal(readerSchema.getFields.get(i).schema(), f.dataType)
+          }
+          new Iterator[InternalRow] {
+            def hasNext: Boolean = { val h = stream.hasNext; if (!h) stream.close(); h }
+            def next(): InternalRow = {
+              // a fresh record per row: strings wrap its Utf8 buffers
+              val rec = stream.next()
               val values = new Array[Any](conv.length)
               var i = 0
               while (i < conv.length) {
@@ -306,10 +295,49 @@ object Ocf {
                 i += 1
               }
               new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
+            }
           }
         }
       }
     org.apache.spark.sql.graftbridge.ColumnBridge.internalDataFrame(spark, rdd, sparkSchema)
+  }
+
+  /** Rows of an OCF stream whose writer schema is the reader schema:
+    * each decompressed block ([[DataFileStream.nextBlock]]) is decoded
+    * in place by [[graft.functions.AvroCodec.FlatReader]], one fresh row
+    * per record. Like the stock reader, a block whose records do not
+    * end exactly at its end fails as corrupt. */
+  private def flatRows(stream: DataFileStream[GenericRecord], readerSchema: Schema,
+      sparkSchema: StructType): Iterator[InternalRow] = {
+    val reader = new graft.functions.AvroCodec.FlatReader(readerSchema, sparkSchema)
+    new Iterator[InternalRow] {
+      private var block: Array[Byte] = _
+      private var pos = 0
+      private var end = 0
+      private var left = 0L
+      private var done = false
+      def hasNext: Boolean = {
+        while (left == 0 && !done) {
+          if (pos != end) throw new java.io.IOException("Block read partially, the data may be corrupt")
+          if (!stream.hasNext) { stream.close(); done = true }
+          else {
+            val bb = stream.nextBlock() // heap-backed: every Avro codec decompresses to an array
+            left = stream.getBlockCount
+            block = bb.array()
+            pos = bb.arrayOffset() + bb.position()
+            end = pos + bb.remaining()
+          }
+        }
+        !done
+      }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val row = reader.newRow()
+        pos = reader.read(block, pos, end, row)
+        left -= 1
+        row
+      }
+    }
   }
 
   /** In-memory OCF decode used by tests: bytes of one container file →

@@ -122,6 +122,9 @@ class FixedAvroSpec extends SparkSpec {
     line("J", "ab", "1", "2", "3", "1..2", "s", ts2, ts2, ts2), // double garbage
     line("J", "ab", "1", "2", "3", "4", "s", "2020-13-01-00.00.00", ts2, ts2), // bad month
     line("J", "ab", "1", "2", "3", "4", "s", ts2, "2020-07-09-09.59", ts2), // truncated tsm
+    // decimal-shaped integers: the cast's exact surface rejects them
+    line("J", "ab", "  12.5", "2", "3", "4", "s", ts2, ts2, ts2),
+    line("J", "ab", "1", "   12.", "3", "4", "s", ts2, ts2, ts2),
     line("", "", "", "", "", "", "", "", "", "")) // all-empty short line
 
   test("fused nullable encoder ≡ parse + to_avro(nullableAvroJson), byte for byte") {
@@ -156,7 +159,13 @@ class FixedAvroSpec extends SparkSpec {
       line("J", "ab", "99999999999", "2", "3", "4", "s", ts, ts, ts), // int overflow (11 digits)
       line("J", "ab", "1", "2", "3", "1..2", "s", ts, ts, ts), // double garbage
       line("J", "ab", "1", "2", "3", "4", "s", "2020-13-01-00.00.00", ts, ts), // bad month
-      line("J", "ab", "1", "2", "3", "4", "s", ts, "2020-07-09-09.59", ts)) // truncated ts
+      line("J", "ab", "1", "2", "3", "4", "s", ts, "2020-07-09-09.59", ts), // truncated ts
+      // decimal-shaped integers (int, then long): null under try_cast,
+      // so the fused encoder must not read them as 12
+      line("J", "ab", "  12.5", "2", "3", "4", "s", ts, ts, ts),
+      line("J", "ab", "   12.", "2", "3", "4", "s", ts, ts, ts),
+      line("J", "ab", "1", "  12.5", "3", "4", "s", ts, ts, ts),
+      line("J", "ab", "1", "   12.", "3", "4", "s", ts, ts, ts))
     bads.zipWithIndex.foreach { case (l, i) =>
       val df = linesDf(Seq(l))
       assert(intercept[Exception](unfused(df)) != null, s"bad line $i: unfused accepted")

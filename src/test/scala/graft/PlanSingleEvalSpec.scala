@@ -72,4 +72,21 @@ class PlanSingleEvalSpec extends SparkSpec {
     assert(occurrences(TextAnalysis.corpusNgramCounts(spark, sf), "filter\\(split") == 1)
     assert(occurrences(TextAnalysis.corpusRepetition(spark, sf), "filter\\(split") == 1)
   }
+
+  test("typed parse + Kafka staging walks each line exactly once") {
+    // Every typed column reads ONE shared bounds walk; a lost
+    // subexpression elimination would re-walk the line per column.
+    val schema = graft.ops.Pipeline.lineitemFixed
+    val dir = java.nio.file.Files.createTempDirectory("graft-single-walk")
+    java.nio.file.Files.write(dir.resolve("part-0.txt"),
+      (" " * schema.rowRuneLen + "\n").getBytes("UTF-8"))
+    def walks(df: org.apache.spark.sql.DataFrame): Int =
+      "FixedSlice\\.bounds\\(".r.findAllIn(
+        org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)).length
+    val typed = graft.sources.FixedWidth.read(spark, dir.toString, schema)
+    assert(walks(graft.sinks.KafkaStage.stage(typed, schema, 7, "t", 1)) == 1)
+    val guarded = graft.parse.FixedWidthParser.parse(
+      graft.sources.FixedWidth.lines(spark, dir.toString), schema, corruptCol = Some("_corrupt"))
+    assert(walks(guarded) == 1)
+  }
 }
