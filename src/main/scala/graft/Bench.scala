@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   * {"metric":"total","value":<sum of per-query medians>,"unit":"sec",
-  *  "queries":{name:medianSec,...},       // median of RUNS counted runs
-  *                                        // (each query also gets ONE
-  *                                        // discarded warmup run first)
+  *  "queries":{family:{"n":N,             // per-family rollup of the
+  *            "sum_median_s":S,           // per-query medians (RUNS
+  *            "sum_min_s":S},...},        // counted runs after ONE
+  *                                        // discarded warmup) and mins
   *  "total_min":N,                        // sum of per-query mins
-  *  "cores":N,"legs":"bench_canonical.json",
-  *  "errors":{name:message,...},          // only when nonempty: counted-run
+  *  "cores":N,
+  *  "errors":{"count":N},                 // only when nonempty: counted-run
   *                                        // failures (warmup-only → stderr)
   *  "sf":"dir"}
   * }}}
@@ -29,9 +30,9 @@ import org.apache.spark.sql.functions._
   * query map grew past 70 entries alongside the leg blocks. Leg/stage
   * throughput, outliers, raw runs, notes, and corpus geometry go to
   * `bench_details.json` (every run) and `bench_canonical.json` (the
-  * COMMITTED record, canonical config only) instead; the headline is
-  * byte-budgeted with a families-rollup fallback so it can never
-  * outgrow the window again as the registry gains queries.
+  * COMMITTED record, canonical config only) instead, with the
+  * per-query map; the headline's size is bounded by the family count,
+  * so it cannot outgrow the window as the registry gains queries.
   *
   * Two headline fixed-width corpora, both >= 4 GiB (large enough that
   * scheduler fixed costs vanish from the per-core numbers), plus a
@@ -129,9 +130,8 @@ object Bench {
   }
 
   private def fmt(d: Double): String = f"$d%.3f"
-  // Headline-only compact forms (the stdout line has a hard budget;
-  // 10 ms query resolution and whole lines/s are honest at this noise
-  // floor — the details file keeps full precision raw runs).
+  // Compact forms: 10 ms resolution and whole MB/s are honest at this
+  // noise floor — the raw-runs arrays keep full precision.
   private def fmt2(d: Double): String = f"$d%.2f"
   private def fmt0(d: Double): String = f"$d%.0f"
   private def arr(xs: Seq[Double]): String = xs.map(fmt).mkString("[", ",", "]")
@@ -432,8 +432,7 @@ object Bench {
     * median is the honest compute figure for a bimodal write path. */
   private def corpusLegs(spark: SparkSession, sfDir: String, key: String,
       schema: FixedSchema, frame: DataFrame, nCores: Int,
-      targetBytes: Long = TargetBytes, cpucalField: String = "",
-      linesRates: Boolean = true): (String, String, String) = {
+      targetBytes: Long = TargetBytes): (String, String) = {
     val (dir, lines, bytes) = corpus(spark, sfDir, key, schema, frame, targetBytes)
     val lineDf = FixedWidth.lines(spark, dir)
     val parsed = graft.parse.FixedWidthParser.parse(lineDf, schema, Strict)
@@ -559,39 +558,17 @@ object Bench {
         s""""ocf_write_ram_min":${fmt2(ocfRamRuns.min)}"""
       else """"ocf_write_ram":null,"ocf_write_ram_min":null"""
     val mbPerS = bytes / 1e6 / parseS
-    // Compact headline (goes on the driver-parsed stdout line). Min-of-N
-    // rides along for the parse and OCF legs (r13): on a drift day a
-    // single interference spike can bury a fix in the median —
-    // parse_min_s / per_core_lines_per_s_best are the engine's
-    // demonstrated-capable figures on the driver's own record. The
-    // headline has a hard byte budget (the driver's 2 KB stdout tail),
-    // so scan/encode mins, the stock-scan A/B, and the weblog
-    // line-rate variants live in bench_details.json only (which
-    // carries every leg's full raw-runs array); per-line rates ride
-    // the headline only for the narrow-row corpus, where lines/s is
-    // the README's claimed figure.
-    val linesRatesJson =
-      if (linesRates)
-        s""","per_core_lines_per_s":${fmt0(lines / parseS / nCores)},""" +
-        s""""per_core_lines_per_s_best":${fmt0(lines / parseRuns.min / nCores)}"""
-      else ""
     // The micro-cal of the min-time parse run: THE number the min-leg
     // lines/s figure is read against (a min leg at cal 0.6x session max
     // is expected to run ~0.6x; one at cal ~1.0 is not).
     val calAtMin = parseCals(parseRuns.indexOf(parseRuns.min))
-    val parsedJson =
-      s"""{"parse_s":${fmt(parseS)},"parse_min_s":${fmt(parseRuns.min)},""" +
-      s""""mb_per_s":${fmt0(mbPerS)},""" +
-      s""""per_core_mb_per_s":${fmt2(mbPerS / nCores)},""" +
-      s""""cal_at_min":${fmt0(calAtMin)}""" +
-      s"""$linesRatesJson$cpucalField}"""
     val stagesJson =
       s"""{"scan":${fmt2(scanS)},""" +
       s""""parse":${fmt2(parseS)},"parse_min":${fmt2(parseRuns.min)},""" +
       s""""encode":${fmt2(encodeS)},""" +
       s""""ocf_write":${fmt2(ocfS)},"ocf_write_min":${fmt2(ocfRuns.min)},""" +
       s""""ocf_cpu":${fmt2(ocfCpuS)},"ocf_cpu_min":${fmt2(ocfCpuRuns.min)},$ramJson}"""
-    // …and the full leg record (goes to bench_details.json).
+    // The full leg record (goes to bench_details.json).
     val detailJson =
       s"""{"lines":$lines,"bytes":$bytes,"cols":${schema.fields.size},""" +
       s""""runes_per_row":${schema.rowRuneLen},"scan_s":${fmt(scanS)},""" +
@@ -623,7 +600,7 @@ object Bench {
       s""""lines_per_s":${fmt(lines / parseS)},"mb_per_s":${fmt(mbPerS)},""" +
       s""""per_core_mb_per_s":${fmt(mbPerS / nCores)},""" +
       s""""per_core_lines_per_s":${fmt(lines / parseS / nCores)}}"""
-    (parsedJson, stagesJson, detailJson)
+    (stagesJson, detailJson)
   }
 
   /** Details-only parse leg (cold + warm runs) — used for the multibyte
@@ -667,14 +644,10 @@ object Bench {
     // pass): the parse legs that follow are read against it.
     val (cpucalMbPerS, cpucalRuns) = cpuCalibration()
     val li = Pipeline.lineitem(spark, sfDir)
-    // compact per-leg json (first tuple slot) is unused since the r16
-    // headline rework — the detail blocks carry the leg figures
-    val (_, stagesJson, detailJson) =
-      corpusLegs(spark, sfDir, "lineitem", Pipeline.lineitemFixed, li, nCores,
-        cpucalField = s""","cpucal_mb_per_s":${fmt0(cpucalMbPerS)}""")
-    val (_, stagesWeblogJson, detailWeblogJson) =
-      corpusLegs(spark, sfDir, "weblog", weblogFixed, weblogFrame(li), nCores,
-        linesRates = false)
+    val (stagesJson, detailJson) =
+      corpusLegs(spark, sfDir, "lineitem", Pipeline.lineitemFixed, li, nCores)
+    val (stagesWeblogJson, detailWeblogJson) =
+      corpusLegs(spark, sfDir, "weblog", weblogFixed, weblogFrame(li), nCores)
     // Multibyte diagnostic leg (details only): prices the rune-aware
     // slicer slow path that the ASCII headline corpora never hit.
     val detailWeblogMbJson = parseLegOnly(spark, sfDir, "weblogmb", weblogFixed,
@@ -769,9 +742,8 @@ object Bench {
       (name, median(counted), counted.min, runsBuf.toSeq, qEnv, extra)
     }
 
-    // Terse 2-dp values (trailing zeros stripped): at 76 queries the
-    // map is the headline's dominant term and every byte of headroom
-    // delays the families-rollup fallback.
+    // Terse 2-dp values (trailing zeros stripped) for the per-query
+    // map in bench_details.json.
     def fmtTerse(d: Double): String =
       fmt2(d).stripSuffix("0").stripSuffix("0").stripSuffix(".")
     val qs = results.map { case (k, m, _, _, _, _) => "\"" + k + "\":" + fmtTerse(m) }
@@ -815,13 +787,11 @@ object Bench {
           ",\"sum_min_s\":" + fmt(rs.map(_._3).sum) +
           ",\"queries\":" + names + "}"
       }.mkString("{", ",", "}")
-    // Headline-fallback form WITHOUT the per-family name arrays: at 129
-    // queries the name lists alone are ~2.7 KB, so the r16 "bounded by
-    // the family count" claim silently broke — the r20 driver record
-    // came back parsed:null AGAIN because the final fallback printed a
-    // 3.3 KB line into the 2 KB tail. The name lists live in
+    // Headline form WITHOUT the per-family name arrays: at 129 queries
+    // the name lists alone are ~2.7 KB, past the 2 KB stdout tail the
+    // round record keeps (the r20 record came back parsed:null). The name lists live in
     // bench_details/bench_canonical.json; the headline only needs the
-    // sums. (r21 measurement-contract fix, noted in OPTIMIZATION_r21.md.)
+    // sums.
     val familiesCompact = famGroups.map { case (fam, rs) =>
         "\"" + fam + "\":{\"n\":" + rs.size +
           ",\"sum_median_s\":" + fmt(rs.map(_._2).sum) +
@@ -865,9 +835,9 @@ object Bench {
       "the per-query and summed minima of the counted runs, and outliers flags " +
       "[min,median] for any query whose median still exceeds 1.5x min " +
       "by >0.3s (empty = clean sweep). The stdout headline (r16) is " +
-      "the driver-contract minimum — metric/value/unit/queries/" +
-      "total_min/cores/sf — byte-budgeted against the driver's 2 KB " +
-      "tail; leg/stage figures live ONLY here and in the committed " +
+      "the contract minimum — metric/value/unit/queries " +
+      "(family rollup)/total_min/cores/sf, bounded by the family " +
+      "count; leg/stage figures live ONLY here and in the committed " +
       "bench_canonical.json (canonical runs), which is the durable " +
       "cross-round per-query history. " +
       "families (r16) rolls the sweep up by operator domain " +
@@ -963,63 +933,25 @@ object Bench {
         s"(sf=$sfDir cores=$nCores; set SPARK_GRAFT_README=1 to force)")
 
     // …and the compact headline as the LAST stdout line, inside the
-    // driver's 2 KB tail window (see the class doc).
-    //
-    // r16 REWORK: the r15 driver record came back parsed:null — the
-    // old headline carried the parse-leg/stage blocks NEXT TO the
-    // queries map, and at 75 queries the line was ~2500 bytes; the
-    // old cascade only shrank outliers/errors and then printed the
-    // over-budget line blind, so the driver's 2048-byte tail started
-    // MID-LINE (the exact rounds-1-4 failure the class doc claimed
-    // fixed, silently regressed as the query count grew). The
-    // headline is now the driver-contract MINIMUM — metric, value,
-    // unit, queries (2-dp), total_min, cores, sf, plus errors only
-    // when nonempty — and the leg/stage blocks live exclusively in
-    // bench_details.json / the committed bench_canonical.json. The
-    // budget is measured in UTF-8 BYTES (the driver window is bytes;
-    // a multibyte path or error char must not slip past a char
-    // count), re-checked after every degrade step, with a final
-    // families-rollup fallback whose size is bounded by the family
-    // count — the line can no longer regrow past the window as the
-    // registry gains queries.
-    def headline(qJson: String, errsJson: String, legsPtr: Boolean): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qJson,""" +
+    // 2 KB stdout tail the round record keeps (see the class doc). It is
+    // the contract minimum — metric, value, unit, queries as the
+    // per-family rollup, total_min, cores, sf, plus the error COUNT
+    // when nonempty — so its size is bounded by the family count, not
+    // the registry size. The per-query map and the leg/stage blocks
+    // live in bench_details.json / the committed bench_canonical.json.
+    val line =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$familiesCompact,""" +
       s""""total_min":${fmt(totalMin)},"cores":$nCores""" +
-      (if (legsPtr) s""","legs":"bench_canonical.json"""" else "") +
-      (if (errsJson.nonEmpty) s""","errors":$errsJson""" else "") +
+      (if (errors.nonEmpty) s""","errors":{"count":${errors.size}}""" else "") +
       s""","sf":${jsonStr(sfDir)}}"""
-    def bytesOf(s: String): Int =
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-    // 2048-byte tail minus the "[info] " prefix and sbt's trailing
-    // "[success] Total time ..." line (~80 bytes).
-    val Budget = 1950
-    val errsCount = s"""{"count":${errors.size}}"""
-    // Degrade cascade, each step re-checked in BYTES: full -> errors
-    // as count -> drop the legs pointer -> queries as family rollup.
-    // The per-query map is the last thing sacrificed (it is the
-    // cross-round signal); the final form is bounded by the family
-    // count, so the line can never outgrow the window again.
-    val steps: Seq[(String, () => String)] = Seq(
-      "full" -> (() => headline(qs, if (errors.nonEmpty) errs else "", legsPtr = true)),
-      "errors -> count" -> (() => headline(qs, if (errors.nonEmpty) errsCount else "", legsPtr = true)),
-      "drop legs pointer" -> (() => headline(qs, if (errors.nonEmpty) errsCount else "", legsPtr = false)),
-      "queries -> FAMILY rollup" -> (() => headline(familiesCompact, if (errors.nonEmpty) errsCount else "", legsPtr = false)))
-    var line = steps.head._2()
-    for ((what, mk) <- steps.tail if bytesOf(line) > Budget) {
-      line = mk()
-      System.err.println(s"[bench] headline over budget; $what " +
-        s"(full record in bench_details/bench_canonical.json); now " +
-        s"${bytesOf(line)} bytes")
-    }
     // Print AFTER spark.stop() and flush (r22): the driver JSON-parses
     // the LAST stdout line, and stop() can emit late executor/netty
     // lines that would land after the headline in a 2>&1 capture.
     // build.sbt's `run / outputStrategy := StdoutOutput` +
     // `showSuccess := false` guarantee no sbt "[info] " prefix and no
     // trailing "[success]" line — the headline is the final stdout
-    // line, verbatim.
-    spark.stop()
-    println(line)
-    System.out.flush()
+    // line, verbatim, even when stop() throws.
+    try spark.stop()
+    finally { println(line); System.out.flush() }
   }
 }

@@ -716,9 +716,9 @@ object Sessions {
     * SMALL slice of a day's actives on this fixture (sf0.1: ~146
     * churned of ~1336 actives/day), so at the same k the relative
     * error runs wider than retention's. Measured on the deterministic
-    * hash draw at sf0.1: max 8.5% / mean 3.2% over 29 day pairs
-    * (tools/ChurnProbe), so 15% leaves ~1.75x headroom against
-    * innocuous re-rolls; sf0.001/0.01 are below capacity and exact. */
+    * hash draw at sf0.1: max 8.5% / mean 3.2% over 29 day pairs, so 15%
+    * leaves ~1.75x headroom against innocuous re-rolls; sf0.001/0.01
+    * are below capacity and exact. */
   val ThetaChurnBound = 0.15
 
   /** `events_churn_sketch`: day-over-day CHURNED users (active on day d,
@@ -736,17 +736,7 @@ object Sessions {
     * Days whose successor day has no events at all drop (no sketch to
     * difference against — same edge as the retention sketch's inner
     * join), as do all-retained days (the exact inner count group). */
-  def eventsChurnSketch(spark: SparkSession, dir: String): DataFrame =
-    eventsChurnDetail(spark, dir)
-      .select(col("day"), col("churned"),
-        (abs(col("est") - col("churned")) / col("churned")
-          <= ThetaChurnBound).as("sketch_within_bound"))
-      .orderBy("day")
-
-  /** (day, churned, est) — the query above minus the gate projection,
-    * shared with tools/ChurnProbe so the measured headroom prices THIS
-    * pipeline, never a drifted copy. */
-  private[graft] def eventsChurnDetail(spark: SparkSession, dir: String): DataFrame = {
+  def eventsChurnSketch(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.ThetaSketch.{theta_anotb_estimate, theta_sketch_agg}
     val du = events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("user_id"))
@@ -761,6 +751,10 @@ object Sessions {
       .join(nextUsers, Seq("day", "user_id"), "left_anti")
       .groupBy("day").agg(count(lit(1)).as("churned"))
     exact.join(est, Seq("day"))
+      .select(col("day"), col("churned"),
+        (abs(col("est") - col("churned")) / col("churned")
+          <= ThetaChurnBound).as("sketch_within_bound"))
+      .orderBy("day")
   }
 
   val eventsChurnSketchOracle: String =

@@ -1412,7 +1412,7 @@ object Similarity {
 
   /** Recall floor for the PQ path. Measured recall@5 vs the exact
     * baseline with the trained codebook at the 0.25 rerank budget:
-    * 0.877 / 0.864 / 0.921 at sf0.001 / 0.01 / 0.1 (ProbePq15) — the
+    * 0.877 / 0.864 / 0.921 at sf0.001 / 0.01 / 0.1 — the
     * floor sits under that band the same way [[AnnRecallFloor]] does.
     * (Seed-only codebook measured 0.79-0.87; the Lloyd step is worth
     * ~+0.06 recall at the same budget on this worst-case corpus.) */

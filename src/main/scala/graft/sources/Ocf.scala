@@ -77,11 +77,6 @@ object Ocf {
     }
   }
 
-  /** Probe/bench access to the InternalRow datum writer. */
-  private[graft] def datumWriter(avroSchema: Schema, sparkSchema: StructType)
-      : org.apache.avro.io.DatumWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    internalRowDatumWriter(avroSchema, sparkSchema)
-
   /** Write `df` as snappy OCF, one file per partition named
     * `<dir>/part-<partitionId>.avro` (≡ `<dir><chunkNr>`,
     * `fixed2avro/Exporters.go:112-123`).
@@ -207,7 +202,8 @@ object Ocf {
     rowsWritten.value
   }
 
-  /** Bench/probe-only CPU twin of [[writeFixed]] (discarding sink). */
+  /** Bench-only CPU twin of [[writeFixed]] (discarding sink): isolates
+    * the leg's CPU cost from device throughput. */
   private[graft] def writeCpuFixed(lines: DataFrame, schema: FixedSchema): Unit = {
     val avroJson = schema.avroJson
     val sparkSchema = schema.sparkSchema
@@ -221,36 +217,6 @@ object Ocf {
       val w = new OcfWire.Writer(avroSchema, sparkSchema, out, 1 << 20)
       try rows.foreach(r => w.appendLine(enc, r.getUTF8String(0)))
       finally w.close()
-    }
-  }
-
-  /** Bench/probe-only: the exact `write` path (datum write + snappy +
-    * container framing) into a discarding sink — isolates the leg's CPU
-    * cost from device throughput, which on this box's /tmp is far below
-    * the reference baseline's NVMe (BASELINE.md: 980 Pro, ~5 GB/s
-    * write; the bench JSON's devcal_mb_per_s carries the live local
-    * figure) and dominates the measured `ocf_write` wall time. */
-  private[graft] def writeCpu(df: DataFrame, schema: FixedSchema): Unit = {
-    val avroJson = schema.avroJson
-    val sparkSchema = df.schema
-    df.queryExecution.toRdd.foreachPartition { rows =>
-      val avroSchema = new Schema.Parser().parse(avroJson)
-      val out = new java.io.OutputStream {
-        override def write(b: Int): Unit = ()
-        override def write(b: Array[Byte], off: Int, len: Int): Unit = ()
-      }
-      // Mirrors `write` exactly (same two paths) minus the device.
-      if (OcfWire.supports(avroSchema, sparkSchema)) {
-        val w = new OcfWire.Writer(avroSchema, sparkSchema, out, 1 << 20)
-        try { rows.foreach(w.append) } finally w.close()
-      } else {
-        val w = new DataFileWriter(internalRowDatumWriter(avroSchema, sparkSchema))
-        w.setCodec(CodecFactory.snappyCodec())
-        w.setSyncInterval(1 << 20)
-        w.create(avroSchema, out)
-        try rows.foreach(w.append)
-        finally w.close()
-      }
     }
   }
 

@@ -174,19 +174,6 @@ private[graft] object OcfWire {
       sealRecord()
     }
 
-    /** Append a pre-encoded Avro record body (the fused fixed→Avro
-      * expression's output, `graft.functions.FixedAvro`): the bytes land
-      * straight in the block buffer — no field dispatch at all. The
-      * caller guarantees the bytes are a record of this writer's schema
-      * (FixedAvroSpec pins them byte-identical to the typed encode). */
-    def appendEncoded(body: Array[Byte]): Unit = {
-      requireLive()
-      val mark = block.size
-      try block.writeRaw(body)
-      catch { case e: Throwable => abortRecord(mark, e) }
-      sealRecord()
-    }
-
     /** Encode a fixed-width LINE straight into the block buffer via the
       * fused line encoder — the zero-per-row-allocation whole-pipeline
       * path (no `byte[]`, no UnsafeRow between parse and container):

@@ -163,7 +163,7 @@ class CorruptAndMultimodalSpec extends SparkSpec {
       assert(in != null, s"missing checked-in fixture $name")
       try in.readAllBytes() finally in.close()
     }
-    import graft.tools.MakeImageFixtures.{W, H, rgb}
+    import MakeImageFixtures.{W, H, rgb}
     def luma(x: Int, y: Int): Int = {
       val (r, g, b) = rgb(x, y); (299 * r + 587 * g + 114 * b) / 1000
     }

@@ -105,7 +105,7 @@ class IvfPqResSpec extends SparkSpec {
     // Without the barrier, whole-stage codegen fuses the LUT projection
     // into the candidate join's stage and defers the expression into
     // the per-match loop — the full residual+table computation re-ran
-    // once per PAIR (measured 75 CPU-s vs 8.6 at sf0.1; ProbeRes18).
+    // once per PAIR (measured 75 CPU-s vs 8.6 at sf0.1).
     // The barrier's signature in the plan: the lut-carrying struct
     // exploded between the probe exchange and the join.
     val plan = Similarity.resProbeLuts(spark, sf,

@@ -41,8 +41,7 @@ class LineScanSpec extends SparkSpec {
   }
 
   // every boundary class: 1-byte (chunk inside CRLF pairs and multibyte
-  // runes), small odd, word-size, huge; the exhaustive sweep lives in
-  // tools/FuzzOnce (200 corpora) to keep the committed suite fast
+  // runes), small odd, word-size, huge
   private val smallChunks = Seq(1L, 3L, 7L, 64L, 1 << 20)
 
   test("LF lines, trailing newline present and absent") {
@@ -82,11 +81,12 @@ class LineScanSpec extends SparkSpec {
         val n = rnd.nextInt(400)
         val sb = new StringBuilder
         (0 until n).foreach { _ =>
-          rnd.nextInt(8) match {
+          rnd.nextInt(9) match {
             case 0 => sb.append('\n')
             case 1 => sb.append("\r\n")
             case 2 => sb.append('\r')
             case 3 => sb.append('λ')
+            case 4 => sb.append('界')
             case _ => sb.append(('a' + rnd.nextInt(26)).toChar)
           }
         }

@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 /** One-shot generator for the checked-in image fixtures the multimodal
   * golden spec decodes (`src/test/resources/graft/gradient.{png,jpg}`).
@@ -7,7 +7,8 @@ package graft.tools
   * b = (x+y)*4 — so the spec can verify the REAL decode against the
   * closed-form pixel values rather than against recorded magic numbers
   * (PNG exactly; JPEG within a lossy tolerance). Rerunnable provenance
-  * for the committed bytes; not engine surface. */
+  * for the committed bytes (`sbt "Test/runMain graft.MakeImageFixtures"`);
+  * not engine surface. */
 object MakeImageFixtures {
   val W = 32
   val H = 24
